@@ -219,10 +219,8 @@ object Dedup {
         s"the single-sidecar ceiling (~1e9 fps at 1e-3); raise `shards` " +
         s"(currently $shards)")
     val spark = corpus.sparkSession
-    // the v1 guard prescribes "reinstall with writeFpStore": over a v1
-    // flat layout, fps/batch=0 landing next to flat files would brick
-    // every later read; over a v2-with-appends, stale generations and
-    // their blooms would survive a full rebuild — clear both shapes
+    // a reinstall over a store with appends must not keep its stale
+    // generations and their blooms
     StoreMaintenance.requireInputNotFromStore(corpus, dir, "writeFpStore")
     StoreMaintenance.clearForReinstall(spark, dir,
       Seq("fps"), Seq("_bloom*.bin"))
@@ -230,8 +228,8 @@ object Dedup {
       .select(TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // formatVersion 2: fps land under per-batch generation dirs
-    // (batch=0 is the base install) and every APPEND owns its own
+    // fps land under per-batch generation dirs (batch=0 is the base
+    // install) and every APPEND owns its own
     // bloom sidecar (see appendToFpStore) — no sidecar is ever
     // read-modify-written, so replays converge by overwrite and two
     // ingest lines with distinct batch ids never lose an update
@@ -251,11 +249,10 @@ object Dedup {
         writeShardBloom(spark, dir, i, keys, perShard, fpp)
       }
     }
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
+    StoreMaintenance.writeMeta(spark, dir, StoreMaintenance.FpStore,
       Map("expectedTotalFps" -> expectedTotalFps.toString,
         "fpp" -> fpp.toString,
-        "shards" -> shards.toString,
-        "formatVersion" -> "2"))
+        "shards" -> shards.toString))
     fps.unpersist(blocking = false)
     // re-install invalidates stale same-session listings (see
     // writeNearDupStore)
@@ -307,13 +304,20 @@ object Dedup {
     * fine when nobody else is writing. */
   def compactFpStoreSidecars(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Unit = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val shards = meta.getOrElse("shards", "1").toInt
+    val shards =
+      StoreMaintenance.readMeta(spark, dir, StoreMaintenance.FpStore)("shards")
+        .toInt
+    foldBloomLanes(spark, dir,
+      if (shards == 1) Seq(None) else (0 until shards).map(Some(_)))
+  }
+
+  /** [[compactFpStoreSidecars]]'s fold over explicit Bloom lanes (None =
+    * the unsharded base filter) — shared with the eval-gram store. */
+  private def foldBloomLanes(spark: org.apache.spark.sql.SparkSession,
+                             dir: String, lanes: Seq[Option[Int]]): Unit = {
     val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lineages: Seq[Option[Int]] =
-      if (shards == 1) Seq(None) else (0 until shards).map(Some(_))
-    lineages.foreach { shard =>
+    lanes.foreach { shard =>
       val prefix = shard.map(i => s"_bloom.s$i").getOrElse("_bloom")
       val batchPat =
         (java.util.regex.Pattern.quote(prefix) + "\\.b(\\d+)\\.bin").r
@@ -351,8 +355,9 @@ object Dedup {
     * anti-join-invisible, but the store should not grow on replay). */
   def compactFpStore(spark: org.apache.spark.sql.SparkSession, dir: String,
                      maxBatchId: Long = Long.MaxValue): Unit = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val shards = meta.getOrElse("shards", "1").toInt
+    val shards =
+      StoreMaintenance.readMeta(spark, dir, StoreMaintenance.FpStore)("shards")
+        .toInt
     val spec =
       if (shards == 1) StoreMaintenance.TableSpec("fps", _.select("fp"))
       else StoreMaintenance.TableSpec("fps",
@@ -472,8 +477,8 @@ object Dedup {
       compactFpStoreSidecars(spark, dir)
       return
     }
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val shards = meta.getOrElse("shards", "1").toInt
+    val meta = StoreMaintenance.readMeta(spark, dir, StoreMaintenance.FpStore)
+    val shards = meta("shards").toInt
     val fpp = meta("fpp").toDouble
     val installed = meta("expectedTotalFps").toLong
     val perShard = fpShardCapacity(installed, shards)
@@ -491,8 +496,8 @@ object Dedup {
           .select("fp").distinct()
           .select(xxhash64(col("fp")).as("k")),
         installed, fpp,
-        newCap => graft.sources.Sources.writeJsonSidecarFs(spark,
-          s"$dir/_meta.json",
+        newCap => StoreMaintenance.writeMeta(spark, dir,
+          StoreMaintenance.FpStore,
           meta + ("expectedTotalFps" -> newCap.toString)))
       if (!ok) unionWithWarn(s"[graft] fp store $dir: $n0 folded fps " +
         "need a filter past the single-sidecar ceiling — keeping the " +
@@ -515,8 +520,7 @@ object Dedup {
           // meta FIRST (the resizeLane crash discipline), then every
           // shard's filter, batch-file deletes last
           if (newPerShard != perShard)
-            graft.sources.Sources.writeJsonSidecarFs(spark,
-              s"$dir/_meta.json",
+            StoreMaintenance.writeMeta(spark, dir, StoreMaintenance.FpStore,
               meta + ("expectedTotalFps" ->
                 (newPerShard * shards).toString))
           (0 until shards).foreach { i =>
@@ -559,9 +563,9 @@ object Dedup {
                                        textCol: String): DataFrame = {
     val spark = batch.sparkSession
     requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    // stores written before sharding existed carry no "shards" key = 1
-    val shards = meta.getOrElse("shards", "1").toInt
+    val shards =
+      StoreMaintenance.readMeta(spark, dir, StoreMaintenance.FpStore)("shards")
+        .toInt
     // sharded probe: route each fp to its shard's filter with a
     // when-chain keyed on the shard id. NOTE the plan carries ALL shard
     // filters (they are expression literals) — sharding raises the
@@ -635,14 +639,10 @@ object Dedup {
     if (newFps.isEmpty) return
     val spark = newFps.sparkSession
     requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    require(meta.getOrElse("formatVersion", "1") == "2",
-      s"fp store at $dir predates per-batch generations (formatVersion " +
-        s"${meta.getOrElse("formatVersion", "1")}); reinstall with " +
-        "writeFpStore to grow it")
+    val meta = StoreMaintenance.readMeta(spark, dir, StoreMaintenance.FpStore)
     val expected = meta("expectedTotalFps").toLong
     val fpp = meta("fpp").toDouble
-    val shards = meta.getOrElse("shards", "1").toInt
+    val shards = meta("shards").toInt
     if (shards == 1) {
       val batchFilter = newFps.select(xxhash64(col("fp")).as("k"))
         .stat.bloomFilter("k", expected, fpp)
@@ -1070,9 +1070,8 @@ object Dedup {
     val counts = boilerplateGramCounts(
       tokenizedWithGroup(corpus, idCol, textCol, groupCol), n)
     counts.write.mode("overwrite").parquet(s"$dir/counts/batch=0")
-    graft.sources.Sources.writeJsonSidecarFs(corpus.sparkSession,
-      s"$dir/_meta.json",
-      Map("n" -> n.toString, "formatVersion" -> "1"))
+    StoreMaintenance.writeMeta(corpus.sparkSession, dir,
+      StoreMaintenance.BoilerplateStore, Map("n" -> n.toString))
     // re-install invalidates stale same-session listings (see
     // writeNearDupStore)
     corpus.sparkSession.catalog.refreshByPath(dir)
@@ -1085,7 +1084,8 @@ object Dedup {
                                batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeBoilerplateStore)")
     val spark = batch.sparkSession
-    val n = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")("n").toInt
+    val n = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.BoilerplateStore)("n").toInt
     boilerplateGramCounts(
         tokenizedWithGroup(batch, idCol, textCol, groupCol), n)
       .write.mode("overwrite").parquet(s"$dir/counts/batch=$batchId")
@@ -1108,7 +1108,8 @@ object Dedup {
                                  textCol: String, groupCol: String,
                                  minDocs: Int = 3): DataFrame = {
     val spark = batch.sparkSession
-    val n = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")("n").toInt
+    val n = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.BoilerplateStore)("n").toInt
     val boiler = spark.read.parquet(s"$dir/counts")
       .groupBy("_g", "hg").agg(sum("_df").as("_df"))
       .filter(col("_df") >= minDocs)
@@ -1453,7 +1454,7 @@ object Dedup {
                          fpp: Double = 0.001): Unit = {
     val spark = evalSet.sparkSession
     // "rebuild over the full suite" is this store's prescribed recovery
-    // (saturation warn, v1 guard): stale gram generations, per-batch
+    // (saturation warn, version guard): stale gram generations, per-batch
     // blooms, or stats entries surviving the reinstall would keep
     // redacting retired suites and double-count the accounting
     StoreMaintenance.requireInputNotFromStore(evalSet, dir,
@@ -1486,10 +1487,9 @@ object Dedup {
       else grams.select(col("h1").as("k")).stat.bloomFilter("k", capacity, fpp)
     graft.sources.Sources.writeBinarySidecarFs(spark, s"$dir/_bloom.bin",
       graft.functions.BloomMightContain.toBytes(filter))
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
+    StoreMaintenance.writeMeta(spark, dir, StoreMaintenance.EvalGramStore,
       Map("n" -> n.toString, "fpp" -> fpp.toString,
-        "expectedTotalGrams" -> capacity.toString,
-        "formatVersion" -> "2"))
+        "expectedTotalGrams" -> capacity.toString))
     // re-install invalidates stale same-session listings (see
     // writeNearDupStore)
     spark.catalog.refreshByPath(dir)
@@ -1519,32 +1519,14 @@ object Dedup {
     require(batchId > 0, "batchId 0 is the base install (writeEvalGramStore)")
     val spark = evalSet.sparkSession
     requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    // a v1 store keeps its gram parquet FLAT under $dir/grams — landing
-    // a grams/batch=<id> dir next to flat files makes every subsequent
-    // read of $dir/grams fail on conflicting directory structures,
-    // bricking the store AFTER this batch's sidecar already landed.
-    // Mirror appendToFpStore: growing a v1 store requires a
-    // writeEvalGramStore reinstall.
-    require(meta.getOrElse("formatVersion", "1") == "2",
-      s"eval-gram store at $dir predates per-batch generations " +
-        s"(formatVersion ${meta.getOrElse("formatVersion", "1")}); " +
-        "reinstall with writeEvalGramStore to grow it")
-    // a v2 store installed before the per-batch `_stats` layout has no
-    // batch_0 entry — heal ONCE by counting the base generation (two
-    // appenders racing the heal write the same value), else the base
-    // suite's grams would contribute 0 to the saturation warn forever
-    val stat0 = new org.apache.hadoop.fs.Path(s"$dir/_stats/batch_0.json")
-    val statFs = stat0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val baseEntry: Map[String, String] =
-      if (statFs.exists(stat0))
-        graft.sources.Sources.readJsonSidecarFs(spark, stat0.toString)
-      else {
-        val n0 = spark.read.parquet(s"$dir/grams/batch=0").count()
-        graft.sources.Sources.writeJsonSidecarFs(spark, stat0.toString,
-          Map("grams" -> n0.toString))
-        Map("grams" -> n0.toString)
-      }
+    val meta = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.EvalGramStore)
+    // the installer lands batch 0's entry before `_meta.json` and the
+    // fold only ever rewrites it, so it exists whenever the meta does
+    val statFs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val baseEntry = graft.sources.Sources.readJsonSidecarFs(spark,
+      s"$dir/_stats/batch_0.json")
     // ids folded into batch 0 by compactEvalGramStore are RETIRED: the
     // accounting would read a re-landed entry as crash residue and the
     // next fold would double the generation's rows — enforce the
@@ -1555,13 +1537,13 @@ object Dedup {
     require(!retired(batchId),
       s"batch id $batchId was folded into batch 0 by " +
         "compactEvalGramStore and is retired — append with a fresh id")
-    // same heal for APPENDED generations: a v2 store grown before the
-    // per-batch accounting change has live grams/batch=<id> dirs with
-    // no `_stats` entry, so the saturation warn undercounts them until
-    // a compaction happens to run — backfill each missing entry once
-    // (one parquet count, then never again; racing appenders write the
-    // same value). Retired ids are skipped: a re-landed folded dir is
-    // replay residue whose rows batch 0 already counts.
+    // backfill for APPENDED generations: a crash between an append's
+    // generation write and its `_stats` entry leaves a live
+    // grams/batch=<id> dir with no entry, so the saturation warn would
+    // undercount it until a compaction happens to run — count each
+    // missing entry once (racing appenders write the same value).
+    // Retired ids are skipped: a re-landed folded dir is replay residue
+    // whose rows batch 0 already counts.
     locally {
       val gdir = new org.apache.hadoop.fs.Path(s"$dir/grams")
       statFs.listStatus(gdir).toSeq
@@ -1670,6 +1652,8 @@ object Dedup {
   def compactEvalGramStore(spark: org.apache.spark.sql.SparkSession,
                            dir: String,
                            maxBatchId: Long = Long.MaxValue): Unit = {
+    val meta = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.EvalGramStore)
     def gens(): Set[Long] = liveGenIds(spark, s"$dir/grams")
     val gensBefore = gens()
     StoreMaintenance.compact(spark, dir,
@@ -1683,12 +1667,10 @@ object Dedup {
     // `_meta.json` — this is the de-saturation the warn in
     // appendToEvalGramStore asks for, paid when the folded parquet is
     // already in hand
-    resizeEvalGramSidecarAfterFold(spark, dir)
+    resizeEvalGramSidecarAfterFold(spark, dir, meta)
     // stats: batch 0's entry becomes the EXACT row count of the folded
     // generation — one parquet count of the table the fold just
-    // rewrote, so a pre-accounting generation (installed before the
-    // per-batch `_stats` layout) heals here instead of contributing 0
-    // forever. Entries of generations no longer on disk are recorded
+    // rewrote. Entries of generations no longer on disk are recorded
     // in batch 0's `folded` list BEFORE being deleted, so a crash
     // between the write and the deletes leaves [[sumStatsEntries]]
     // exact (it skips listed ids) and a re-run prunes the residue.
@@ -1696,24 +1678,23 @@ object Dedup {
     val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pat = "batch_(\\d+)\\.json".r
     val entryIds: Set[Long] =
-      if (!fs.exists(statsDir)) Set.empty
-      else fs.listStatus(statsDir).toSeq.map(_.getPath.getName).flatMap {
+      fs.listStatus(statsDir).toSeq.map(_.getPath.getName).flatMap {
         case pat(id) => Some(id.toLong)
         case _ => None
       }.toSet
     val liveGens: Set[Long] = gens()
-    val alreadyFolded =
-      (if (entryIds(0L)) graft.sources.Sources.readJsonSidecarFs(spark,
-        s"$dir/_stats/batch_0.json") else Map.empty[String, String])
-        .get("folded")
-        .map(_.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
-        .getOrElse(Set.empty[Long])
+    val alreadyFolded = graft.sources.Sources
+      .readJsonSidecarFs(spark, s"$dir/_stats/batch_0.json")
+      .get("folded")
+      .map(_.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
+      .getOrElse(Set.empty[Long])
     // an id is RETIRED the moment its generation folds into batch=0:
-    // the ids folded THIS call (generation-set diff — catches legacy
-    // entry-less generations too), entries whose generation dir is gone
-    // (a crashed prior run's fold), and every id retired before. The
-    // retire set is PERMANENT — batch 0's `folded` list keeps carrying
-    // an id after its residue entry file is deleted, because
+    // the ids folded THIS call (generation-set diff — catches
+    // generations whose entry a crashed append never wrote), entries
+    // whose generation dir is gone (a crashed prior run's fold), and
+    // every id retired before. The retire set is PERMANENT — batch
+    // 0's `folded` list keeps carrying an id after its residue entry
+    // file is deleted, because
     // [[appendToEvalGramStore]]'s retired-id require is the only thing
     // standing between a replayed folded batch and double-landed grams
     // + double-counted saturation accounting; forgetting the id once
@@ -1725,11 +1706,10 @@ object Dedup {
     // (crash between the fold write and the entry deletes)
     val residue = retire & entryIds
     // idempotent no-op: nothing was folded this call (generation set
-    // unchanged), no crash residue to prune, batch 0's entry present
-    // (and with it the persisted retire list) — skip the O(store)
+    // unchanged) and no crash residue to prune — skip the O(store)
     // recount + rewrite a maintenance sweep would otherwise pay per
     // visit
-    if (liveGens == gensBefore && residue.isEmpty && entryIds(0L)) return
+    if (liveGens == gensBefore && residue.isEmpty) return
     val keepFolded = retire.toSeq.sorted
     val count0 = spark.read.parquet(s"$dir/grams/batch=0").count()
     graft.sources.Sources.writeJsonSidecarFs(spark,
@@ -1750,26 +1730,26 @@ object Dedup {
     * per-batch filters — one [[resizeLane]] call, so the two store
     * families share the meta-first crash discipline by construction. */
   private def resizeEvalGramSidecarAfterFold(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      meta: Map[String, String]): Unit = {
     if (batchBloomFiles(spark, dir).isEmpty) return
     if ((liveGenIds(spark, s"$dir/grams") - 0L).nonEmpty) {
-      compactFpStoreSidecars(spark, dir)
+      foldBloomLanes(spark, dir, Seq(None))
       return
     }
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
     val fpp = meta("fpp").toDouble
     val (ok, n0) = resizeLane(spark, dir,
       spark.read.parquet(s"$dir/grams/batch=0")
         .select(col("h1").as("k")).distinct(),
       meta("expectedTotalGrams").toLong, fpp,
-      newCap => graft.sources.Sources.writeJsonSidecarFs(spark,
-        s"$dir/_meta.json",
+      newCap => StoreMaintenance.writeMeta(spark, dir,
+        StoreMaintenance.EvalGramStore,
         meta + ("expectedTotalGrams" -> newCap.toString)))
     if (!ok) {
       System.err.println(s"[graft] eval-gram store $dir: $n0 folded " +
         "grams need a filter past the single-sidecar ceiling — keeping " +
         "the saturated union; split the suite across stores")
-      compactFpStoreSidecars(spark, dir)
+      foldBloomLanes(spark, dir, Seq(None))
     }
   }
 
@@ -1788,7 +1768,8 @@ object Dedup {
                                     idCol: String, textCol: String): DataFrame = {
     val spark = corpus.sparkSession
     requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
+    val meta = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.EvalGramStore)
     decontaminateRewriteLoaded(corpus, dir, meta("n").toInt,
       mergedBloomBytes(spark, dir, None), idCol, textCol)
   }
@@ -1915,7 +1896,7 @@ object Dedup {
   /** (id, hs) hashed-shingle projection of a frame — the shared
     * per-batch table the streaming near-dup loop computes ONCE and
     * feeds to the store probe, the within-batch pair pass, and the
-    * survivor append (the *Hashed seams). */
+    * survivor append. */
   private[graft] def hashedShinglesFor(df: DataFrame, idCol: String,
                                        textCol: String, n: Int): DataFrame =
     hashedShingles(shingles(df, idCol, textCol, n))
@@ -1927,7 +1908,7 @@ object Dedup {
   private[graft] def sizedSignaturesFor(h: DataFrame,
                                         meta: Map[String, String]): DataFrame =
     minHashSignaturesHashed(h, meta("numHashes").toInt,
-      meta.getOrElse("minhashSeed", "42").toLong, withSize = true)
+      meta("minhashSeed").toLong, withSize = true)
 
   /** Shared tail of the Jaccard paths: join per-doc sizes onto the
     * per-pair shared counts, compute/filter the coefficient. Kept single
@@ -2063,9 +2044,6 @@ object Dedup {
   }
 
   /** Exact Jaccard restricted to a candidate pair set (id_a < id_b). */
-  def jaccardFor(sh: DataFrame, candidates: DataFrame, threshold: Double): DataFrame =
-    jaccardForHashed(hashedShingles(sh), candidates, threshold)
-
   private def jaccardForHashed(h: DataFrame, candidates: DataFrame,
                                threshold: Double): DataFrame = {
     // deliberately THREE plain consumers of the (persisted/checkpointed)
@@ -2074,9 +2052,7 @@ object Dedup {
     // 40% of the whole bench battery (the semi-join+distinct subtree is
     // not a cached block, so it executed once PER consumer: d3 4.1→18.5
     // s, d10 2.8→10.8 s) and was reverted; callers guarantee h is
-    // (id, hs)-unique (per-doc distinct shingles; the at-rest store's
-    // append path is batch-keyed idempotent, so replays overwrite
-    // rather than duplicate).
+    // (id, hs)-unique (per-doc distinct shingles).
     val sizes = h.groupBy("id").agg(count(lit(1)).as("sz"))
     val shared = candidates
       .join(h.withColumnRenamed("id", "id_a").withColumnRenamed("hs", "h_a"), "id_a")
@@ -2115,9 +2091,6 @@ object Dedup {
   /** MinHash signatures: `numHashes` affine transforms of xxhash64(shingle),
     * min per hash per doc — ONE aggregation pass over the shingle table.
     * Seeded, fully deterministic. */
-  def minHashSignatures(sh: DataFrame, numHashes: Int, seed: Long = 42L): DataFrame =
-    minHashSignaturesHashed(hashedShingles(sh), numHashes, seed)
-
   private def minHashSignaturesHashed(h: DataFrame, numHashes: Int,
                                       seed: Long,
                                       withSize: Boolean = false): DataFrame = {
@@ -2224,12 +2197,12 @@ object Dedup {
       numHashes, bands, threshold)
   }
 
-  /** Shared tail of the incremental paths: batch hashed shingles vs a
-    * corpus given as (hashed shingles, signatures) — live or at-rest. */
+  /** [[incrementalNearDup]]'s tail: batch hashed shingles vs a corpus
+    * given as (hashed shingles, signatures), both signed with seed 42. */
   private def crossNearDup(hB: DataFrame, hC: DataFrame, sigC: DataFrame,
                            numHashes: Int, bands: Int,
-                           threshold: Double, seed: Long = 42L): DataFrame = {
-    val bB = bandBuckets(minHashSignaturesHashed(hB, numHashes, seed),
+                           threshold: Double): DataFrame = {
+    val bB = bandBuckets(minHashSignaturesHashed(hB, numHashes, 42L),
       numHashes, bands)
     val bC = bandBuckets(sigC, numHashes, bands)
     val cands = bB.as("x").join(bC.as("y"),
@@ -2242,7 +2215,7 @@ object Dedup {
   /** Materialize the at-rest near-dup store for a corpus: the hashed
     * shingle table and the MinHash signature table, written as parquet
     * under `dir`, plus a `_meta.json` sidecar recording (shingleSize,
-    * numHashes, minhashSeed, formatVersion) — everything a reader must
+    * numHashes, minhashSeed, bands, pfxBits) — everything a reader must
     * agree on, because ANY mismatch (4-gram reader on a 3-gram store, a
     * differently-seeded signer) silently yields near-zero pairs. This is
     * what turns `incrementalNearDup`'s "recomputing the corpus side
@@ -2254,26 +2227,19 @@ object Dedup {
     * Hadoop filesystem so an hdfs://-/s3a://-rooted store keeps its
     * meta NEXT TO its tables, not on the driver's local disk.
     *
-    * `pfxBits` sizes the band-key tree: a generation writes
-    * bands · 2^pfxBits directories, and a batch probe reads ~2^-pfxBits
-    * of the store per matched band. The default (2 → 64 dirs) prices
-    * directory/committer churn for small generations; at cluster scale
-    * raise it (4–6) — bigger generations amortize the dirs and the
-    * probes prune proportionally harder. `pfxBits = 0` opts OUT of the
-    * band-key table entirely (the v1 layout): installs and appends
-    * skip the per-generation band-key write, and probes band the
-    * signature table at read time — store-linear probes, cheaper
-    * ingest. Right for one-shot stores probed a handful of times;
-    * wrong for a long ingest line, where every batch would re-scan the
-    * growing signature table (the round-14 linear term the v2 layout
-    * removed). */
+    * `bands` pins the LSH banding every probe uses. `pfxBits` sizes
+    * the band-key tree: a generation writes bands · 2^pfxBits
+    * directories, and a batch probe reads ~2^-pfxBits of the store per
+    * matched band. The default (2 → 64 dirs) prices directory/committer
+    * churn for small generations; at cluster scale raise it (4–6) —
+    * bigger generations amortize the dirs and the probes prune
+    * proportionally harder. */
   def writeNearDupStore(corpus: DataFrame, idCol: String, textCol: String,
                         dir: String, shingleSize: Int = 3,
                         numHashes: Int = 64, seed: Long = 42L,
                         bands: Int = 16, pfxBits: Int = 2): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    require(pfxBits >= 0 && pfxBits <= 16,
-      "pfxBits must be in [1, 16], or 0 for the v1 no-band-key layout")
+    require(pfxBits >= 1 && pfxBits <= 16, "pfxBits must be in [1, 16]")
     val h = hashedShingles(shingles(corpus, idCol, textCol, shingleSize))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // batch=0 is the base install; appends land under their own
@@ -2304,36 +2270,27 @@ object Dedup {
       () => {
         sigs.hint("rebalance").write.mode("overwrite")
           .parquet(s"$dir/signatures/batch=0")
-        // formatVersion 2+: the store ALSO lands its band-bucket keys,
-        // partitioned by (band, pfx = top pfxBits bits of the bucket
-        // hash) — a probing batch knows exactly which (band, pfx)
-        // partitions its own band keys can collide in, so the candidate
-        // read is partition-pruned instead of banding a full signature
-        // scan per batch (the round-14 store-linear term). The banding
-        // geometry is pinned here; a probe called with a different
-        // `bands` knob falls back to the signature path (still correct,
-        // store-linear) rather than mis-colliding. Band keys land AFTER
-        // the signature write: a candidate implies its band-key row,
-        // which now implies the signature (and its sz) landed — the
-        // inert-orphan classes stay exactly the documented ones.
-        if (pfxBits > 0)
-          writeBandKeysGeneration(sigs, dir, 0L, numHashes, bands, pfxBits)
+        // the store ALSO lands its band-bucket keys, partitioned by
+        // (band, pfx = top pfxBits bits of the bucket hash) — a probing
+        // batch knows exactly which (band, pfx) partitions its own band
+        // keys can collide in, so the candidate read is partition-pruned
+        // instead of banding a full signature scan per batch. Band keys
+        // land AFTER the signature write: a candidate implies its
+        // band-key row, which implies the signature (and its sz)
+        // landed — the inert-orphan classes stay exactly the documented
+        // ones.
+        writeBandKeysGeneration(sigs, dir, 0L, numHashes, bands, pfxBits)
       })
     sigs.unpersist()
     h.unpersist()
-    val geometry =
-      if (pfxBits > 0)
-        Map("bands" -> bands.toString, "pfxBits" -> pfxBits.toString,
-          "formatVersion" -> "3")
-      else Map("formatVersion" -> "3") // no pinned bands: probes re-band
-    graft.sources.Sources.writeJsonSidecarFs(corpus.sparkSession,
-      s"$dir/_meta.json",
+    StoreMaintenance.writeMeta(corpus.sparkSession, dir,
+      StoreMaintenance.NearDupStore,
       Map("shingleSize" -> shingleSize.toString,
         "numHashes" -> numHashes.toString,
         "minhashSeed" -> seed.toString,
-        // v3 marker: the signature table carries the per-doc shingle
-        // count; probes on a pre-v3 store fall back to aggregating
-        "sigSize" -> "1") ++ geometry)
+        // the signature table carries the per-doc shingle count
+        "sigSize" -> "1",
+        "bands" -> bands.toString, "pfxBits" -> pfxBits.toString))
     // a RE-install over a previously-read dir (same session) must
     // invalidate the shared file-status cache, or the first read serves
     // the pre-install listing and dies on vanished files — the append
@@ -2379,61 +2336,33 @@ object Dedup {
     require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
     val spark = batch.sparkSession
     requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    appendHashedShingles(spark,
-      hashedShingles(shingles(batch, idCol, textCol,
-        meta("shingleSize").toInt)),
-      dir, batchId, meta)
-  }
-
-  /** [[appendToNearDupStore]] from a caller-held hashed-shingle table
-    * (id, hs) signed with the store's geometry — the streaming loop's
-    * compute-once seam (see incrementalNearDupFromStoreHashed). The
-    * frozen-snapshot contract is enforced HERE (localCheckpoint before
-    * the first write) regardless of the caller's lineage. */
-  private[graft] def appendToNearDupStoreHashed(hIn: DataFrame, dir: String,
-                                                batchId: Long): Unit = {
-    require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
-    val spark = hIn.sparkSession
-    requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    appendHashedShingles(spark, hIn, dir, batchId, meta)
-  }
-
-  /** Shared append tail. EAGER SNAPSHOT, not persist: the rows to
-    * write must be frozen BEFORE the first write touches the store. A
-    * caller's batch — e.g. the streaming loop's `kept` — typically
-    * descends from a pairing that scans the store, and Spark recaches
-    * path-dependent plan-keyed cache entries after each parquet write;
-    * a merely persisted `h` would be invalidated by the FIRST write
-    * and recomputed against the HALF-WRITTEN store — where the batch
-    * doc now near-dups its own just-landed signature — so the SECOND
-    * write would land zero rows. localCheckpoint truncates the
-    * lineage so both writes emit the same frozen rows. */
-  private def appendHashedShingles(spark: org.apache.spark.sql.SparkSession,
-                                   hIn: DataFrame, dir: String,
-                                   batchId: Long,
-                                   meta: Map[String, String]): Unit = {
-    val numHashes = meta("numHashes").toInt
-    val seed = meta.getOrElse("minhashSeed", "42").toLong
-    val h = hIn.localCheckpoint()
-    // sz column only when the store's layout has it (sigSize, v3+) — an
-    // append must match the store it grows, or the fold would union
-    // mismatched schemas
-    val sigs = minHashSignaturesHashed(h, numHashes, seed,
-      withSize = meta.get("sigSize").contains("1")).localCheckpoint()
+    val meta = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.NearDupStore)
+    // EAGER SNAPSHOT, not persist: the rows to write must be frozen
+    // BEFORE the first write touches the store. A caller's batch — e.g.
+    // the streaming loop's `kept` — typically descends from a pairing
+    // that scans the store, and Spark recaches path-dependent
+    // plan-keyed cache entries after each parquet write; a merely
+    // persisted `h` would be invalidated by the FIRST write and
+    // recomputed against the HALF-WRITTEN store — where the batch doc
+    // now near-dups its own just-landed signature — so the SECOND write
+    // would land zero rows. localCheckpoint truncates the lineage so
+    // both writes emit the same frozen rows.
+    val h = hashedShingles(shingles(batch, idCol, textCol,
+      meta("shingleSize").toInt)).localCheckpoint()
+    val sigs = sizedSignaturesFor(h, meta).localCheckpoint()
     appendGenerationTables(spark, h, sigs, dir, batchId, meta)
     sigs.unpersist()
     h.unpersist()
   }
 
-  /** [[appendToNearDupStoreHashed]] from caller-held shingles AND sized
+  /** [[appendToNearDupStore]] from caller-held shingles AND sized
     * signatures — the streaming loop's share-the-minhash seam: the
     * probe's frozen sigB, sliced to the survivors, lands directly, so
     * the per-trigger minhash aggregation runs ONCE (probe) instead of
-    * twice (probe + append). CALLER CONTRACT, replacing this tail's
-    * usual localCheckpoint: both frames must be safe to recompute
-    * mid-append — lineage either FROZEN (a localCheckpoint'd frame, or
+    * twice (probe + append). CALLER CONTRACT, replacing
+    * [[appendToNearDupStore]]'s localCheckpoint: both frames must be
+    * safe to recompute mid-append — lineage either FROZEN (a localCheckpoint'd frame, or
     * a slice of one by a frozen id list) or reading only non-store
     * inputs. A lineage that scans the store would be recomputed against
     * the half-written store by the second write and land zero rows. */
@@ -2444,11 +2373,7 @@ object Dedup {
     require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
     val spark = hKept.sparkSession
     requireNoCrashedCompaction(spark, dir)
-    // the probe's sigB always carries sz; a pre-v3 store's layout does
-    // not — drop it so the appended generation matches the store
-    val aligned =
-      if (meta.get("sigSize").contains("1")) sigsKept else sigsKept.drop("sz")
-    appendGenerationTables(spark, hKept, aligned, dir, batchId, meta)
+    appendGenerationTables(spark, hKept, sigsKept, dir, batchId, meta)
   }
 
   /** Shared write fan-out of the append paths. `h`/`sigs` must be
@@ -2475,14 +2400,9 @@ object Dedup {
       () => {
         sigs.hint("rebalance").write.mode("overwrite")
           .parquet(s"$dir/signatures/batch=$batchId")
-        // v2+ stores also land the batch's band keys (see
-        // writeNearDupStore); a v1 store (no pinned bands) skips it —
-        // its probes band the signature table at read time, so the
-        // table would be dead weight.
-        meta.get("bands").foreach { b =>
-          writeBandKeysGeneration(sigs, dir, batchId, numHashes,
-            b.toInt, meta("pfxBits").toInt)
-        }
+        // and the batch's band keys (see writeNearDupStore)
+        writeBandKeysGeneration(sigs, dir, batchId, numHashes,
+          meta("bands").toInt, meta("pfxBits").toInt)
       })
     // invalidate cached reads of the store: CacheManager matches plans
     // by ROOT PATH, not file listing, so a store scan persisted by an
@@ -2493,7 +2413,7 @@ object Dedup {
     spark.catalog.refreshByPath(dir)
   }
 
-  /** Shared writer half of the v2 band-key table: explode signatures
+  /** Shared writer half of the band-key table: explode signatures
     * into (band, bh) keys and land them partitioned by (band, pfx =
     * top `pfxBits` bits of the 32-bit bucket hash) under the batch's
     * generation dir. ~(4 B key + 8 B id) × bands per doc at rest. */
@@ -2544,28 +2464,23 @@ object Dedup {
   def compactNearDupStore(spark: org.apache.spark.sql.SparkSession,
                           dir: String,
                           maxBatchId: Long = Long.MaxValue): Unit = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val numHashes = meta("numHashes").toInt
-    // v3 stores carry the per-doc shingle count on the signature table —
-    // the fold must preserve it or probes lose their size lookup
-    val sigCols = (0 until numHashes).map(i => s"mh_$i") ++
-      (if (meta.get("sigSize").contains("1")) Seq("sz") else Nil)
-    val tables = Seq(
+    val meta = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.NearDupStore)
+    // the signature table's per-doc shingle count rides the fold — the
+    // probes' size lookup reads it
+    val sigCols = (0 until meta("numHashes").toInt).map(i => s"mh_$i") :+ "sz"
+    StoreMaintenance.compact(spark, dir, Seq(
       StoreMaintenance.TableSpec("shingles", _.select("id", "hs")),
-      StoreMaintenance.TableSpec("signatures",
-        _.select("id", sigCols: _*))) ++
-      (if (meta.contains("bands"))
-        Seq(StoreMaintenance.TableSpec("bandkeys",
-          _.select(col("band"), col("pfx"), col("bh"), col("id"))
-            // explicit count = dir count, same rationale as
-            // writeBandKeysGeneration: an AQE-coalesced single task
-            // would create every (band, pfx) directory serially
-            .repartition(
-              meta("bands").toInt << meta("pfxBits").toInt,
-              col("band"), col("pfx")),
-          partitionCols = Seq("band", "pfx")))
-       else Nil)
-    StoreMaintenance.compact(spark, dir, tables, maxBatchId)
+      StoreMaintenance.TableSpec("signatures", _.select("id", sigCols: _*)),
+      StoreMaintenance.TableSpec("bandkeys",
+        _.select(col("band"), col("pfx"), col("bh"), col("id"))
+          // explicit count = dir count, same rationale as
+          // writeBandKeysGeneration: an AQE-coalesced single task
+          // would create every (band, pfx) directory serially
+          .repartition(
+            meta("bands").toInt << meta("pfxBits").toInt,
+            col("band"), col("pfx")),
+        partitionCols = Seq("band", "pfx"))), maxBatchId)
   }
 
   private def requireNoCrashedCompaction(
@@ -2573,113 +2488,56 @@ object Dedup {
     StoreMaintenance.requireNoCrashedCompaction(spark, dir)
 
   /** D10 against the at-rest store: the batch is the only side that
-    * tokenizes, hashes, or signs — the corpus arrives as two pruned
-    * parquet scans of the store `writeNearDupStore` landed. The
-    * shingle size, hash count, AND MinHash seed come FROM the store's
+    * tokenizes, hashes, or signs — the corpus arrives as pruned parquet
+    * scans of the store `writeNearDupStore` landed. The shingle size,
+    * hash count, MinHash seed AND banding come FROM the store's
     * `_meta.json` (a mismatched reader would silently emit near-zero
     * pairs — 4-gram hashes never collide with a 3-gram store, and a
     * differently-seeded batch signer never bands with the stored
-    * signatures; stores written before the seed was recorded default
-    * to the historical 42); `bands` and `threshold` stay query-time
-    * knobs. Same output as `incrementalNearDup` on the same corpus
-    * (spec-pinned).
+    * signatures); `threshold` stays a query-time knob. Same output as
+    * `incrementalNearDup` on the same corpus (spec-pinned).
     *
-    * Cache policy: the batch projection and the store shingle scan are
-    * persisted (both feed the candidate join AND the exact-Jaccard
-    * verify — unpersisted, the store would be scanned three times per
-    * batch). Like the rest of the dedup family the blocks are keyed by
-    * logical plan and reused across calls on the same inputs; one-shot
-    * sessions reclaim them with spark.catalog.clearCache() (NOTES.md
-    * "Cache policy in dedup operators"). */
+    * Cache policy: the batch projection is persisted (it feeds the
+    * signature agg AND the exact-Jaccard verify). Like the rest of the
+    * dedup family the blocks are keyed by logical plan and reused
+    * across calls on the same inputs; one-shot sessions reclaim them
+    * with spark.catalog.clearCache() (NOTES.md "Cache policy in dedup
+    * operators"). */
   def incrementalNearDupFromStore(batch: DataFrame, dir: String,
                                   idCol: String, textCol: String,
-                                  bands: Int = 16,
                                   threshold: Double = 0.8): DataFrame = {
     // crashed-compaction guard BEFORE any store file is touched (meta
     // included) — reading mid-swap could see a half-old/half-new table
-    // set; the meta is read ONCE here and passed through
+    // set
     requireNoCrashedCompaction(batch.sparkSession, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(batch.sparkSession,
-      s"$dir/_meta.json")
-    incrementalNearDupFromStoreHashedMeta(
-      hashedShingles(shingles(batch, idCol, textCol,
+    val meta = StoreMaintenance.readMeta(batch.sparkSession, dir,
+      StoreMaintenance.NearDupStore)
+    val hB = hashedShingles(shingles(batch, idCol, textCol,
         meta("shingleSize").toInt))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      dir, meta, bands, threshold)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the batch's sized signatures feed the band keys AND the a-side
+    // size lookup — frozen once, shared
+    incrementalNearDupFromStoreSigs(hB,
+      sizedSignaturesFor(hB, meta).localCheckpoint(), dir, meta, threshold)
   }
 
-  /** [[incrementalNearDupFromStore]] from a caller-held hashed-shingle
-    * table (id, hs) signed with the STORE's geometry — the
-    * compute-the-batch-once seam of the streaming ingest loop: one
-    * (tokenize → gram → hash) pass per micro-batch feeds the store
-    * probe, the within-batch pair pass, AND the survivor append
-    * (guide §1.2). The caller persists `hB`; its lineage must not read
-    * the store (a raw batch projection qualifies). */
-  private[graft] def incrementalNearDupFromStoreHashed(
-      hB: DataFrame, dir: String,
-      bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    requireNoCrashedCompaction(hB.sparkSession, dir)
-    incrementalNearDupFromStoreHashedMeta(hB, dir,
-      graft.sources.Sources.readJsonSidecarFs(hB.sparkSession,
-        s"$dir/_meta.json"),
-      bands, threshold)
-  }
-
-  /** The probe body, from a caller-held meta (read once per call chain —
-    * the wrapper and the streaming loop both read the sidecar exactly
-    * once). The crashed-compaction guard has already run. */
-  private[graft] def incrementalNearDupFromStoreHashedMeta(
-      hB: DataFrame, dir: String, meta: Map[String, String],
-      bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    val spark = hB.sparkSession
-    val numHashes = meta("numHashes").toInt
-    val seed = meta.getOrElse("minhashSeed", "42").toLong
-    if (meta.get("bands").map(_.toInt).contains(bands)) {
-      // the batch's sized signatures feed the band keys AND the a-side
-      // size lookup — frozen once, shared
-      val sigB = minHashSignaturesHashed(hB, numHashes, seed,
-        withSize = true).localCheckpoint()
-      incrementalNearDupFromStoreSigs(hB, sigB, dir, meta, bands, threshold)
-    } else {
-      // fallback: the caller's `bands` knob differs from the store's
-      // pinned geometry (or a v1 store with no band keys) — band the
-      // signature table at read time, store-linear but correct
-      val hC = spark.read.parquet(s"$dir/shingles").select("id", "hs")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      crossNearDup(hB, hC,
-        spark.read.parquet(s"$dir/signatures")
-          .select("id", (0 until numHashes).map(i => s"mh_$i"): _*),
-        numHashes, bands, threshold, seed)
-    }
-  }
-
-  /** The v2+ pruned probe from caller-held FROZEN sized batch
-    * signatures (localCheckpoint'd, `sz` column present) — the
-    * streaming loop's share-the-signatures seam: the same sigB feeds
-    * this probe and the survivor append, so the minhash aggregation
-    * runs once per micro-batch instead of twice. Candidates come from
+  /** The pruned store probe from caller-held FROZEN sized batch
+    * signatures (localCheckpoint'd, `sz` column present) and a
+    * caller-held meta — the streaming loop's share-the-signatures seam:
+    * the same sigB feeds this probe and the survivor append, so the
+    * minhash aggregation runs once per micro-batch instead of twice.
+    * The crashed-compaction guard has already run. Candidates come from
     * the at-rest band-key table, read ONLY in the (band, pfx)
     * partitions the batch's own band keys can collide in — per-batch
     * candidate cost tracks the batch's prefix coverage, not the landed
-    * corpus. Sizes: the batch side reads `sz` off sigB; the store side
-    * reads (id, sz) off the SIGNATURE table's pruned 2-column scan when
-    * the store is v3+ (sigSize), else falls back to aggregating the
-    * store shingles — the pre-v3 O(store) term. */
+    * corpus. Sizes: the batch side reads `sz` off sigB, the store side
+    * reads (id, sz) off the signature table's pruned 2-column scan. */
   private[graft] def incrementalNearDupFromStoreSigs(
       hB: DataFrame, sigB: DataFrame, dir: String, meta: Map[String, String],
-      bands: Int = 16, threshold: Double = 0.8): DataFrame =
-    if (!meta.get("bands").map(_.toInt).contains(bands))
-      // no pinned matching geometry (v1 store, or a caller bands knob
-      // that differs) — the store-linear fallback; sigB goes unused
-      incrementalNearDupFromStoreHashedMeta(hB, dir, meta, bands, threshold)
-    else incrementalNearDupFromStoreSigsPruned(hB, sigB, dir, meta, bands,
-      threshold)
-
-  private def incrementalNearDupFromStoreSigsPruned(
-      hB: DataFrame, sigB: DataFrame, dir: String, meta: Map[String, String],
-      bands: Int, threshold: Double): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     val spark = hB.sparkSession
     val numHashes = meta("numHashes").toInt
+    val bands = meta("bands").toInt
     val pfxBits = meta("pfxBits").toInt
     val bB = bandBuckets(sigB, numHashes, bands)
       .select(col("id"), col("band"),
@@ -2706,19 +2564,12 @@ object Dedup {
     // explicit projections: the store dirs are batch=<id>-partitioned,
     // and the discovered partition column must not ride into joins.
     // hC has ONE consumer here (the id_b-side intersection join), so it
-    // is deliberately NOT persisted — the pre-v3 probe cached the whole
-    // store shingle table because three consumers (sizes agg + both
-    // intersection sides) read it.
-    val hC = spark.read.parquet(s"$dir/shingles").select("id", "hs")
-    if (meta.get("sigSize").contains("1"))
-      jaccardCrossHashed(hB, hC,
-        sigB.select(col("id"), col("sz")),
-        spark.read.parquet(s"$dir/signatures").select(col("id"), col("sz")),
-        cands, threshold)
-    else
-      jaccardForHashed(
-        hB.unionByName(hC.persist(StorageLevel.MEMORY_AND_DISK)),
-        cands, threshold)
+    // is deliberately NOT persisted.
+    jaccardCrossHashed(hB,
+      spark.read.parquet(s"$dir/shingles").select("id", "hs"),
+      sigB.select(col("id"), col("sz")),
+      spark.read.parquet(s"$dir/signatures").select(col("id"), col("sz")),
+      cands, threshold)
   }
 
   /** True ⇔ the corpus is small enough that the exact all-shared-shingle

@@ -444,9 +444,8 @@ object Multimodal {
     writeBandedGeneration(
       imageDHash(images, idCol, bytesCol), idCol,
       dir, 0L, bands, pfxBits)
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
-      Map("formatVersion" -> "2", "bands" -> bands.toString,
-        "pfxBits" -> pfxBits.toString))
+    StoreMaintenance.writeMeta(spark, dir, StoreMaintenance.ImageNearDupStore,
+      Map("bands" -> bands.toString, "pfxBits" -> pfxBits.toString))
     spark.catalog.refreshByPath(dir)
   }
 
@@ -461,7 +460,8 @@ object Multimodal {
     require(batchId > 0, "batchId 0 is the base install")
     val spark = batch.sparkSession
     StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
+    val meta = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.ImageNearDupStore)
     writeBandedGeneration(
       imageDHash(batch, idCol, bytesCol), idCol,
       dir, batchId, meta("bands").toInt, meta("pfxBits").toInt)
@@ -524,7 +524,8 @@ object Multimodal {
                               bytesCol: String = "bytes"): DataFrame = {
     val spark = batch.sparkSession
     StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
+    val meta = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.ImageNearDupStore)
     val bands = meta("bands").toInt
     val pfxBits = meta("pfxBits").toInt
     requireBandedExact(maxHamming, bands)

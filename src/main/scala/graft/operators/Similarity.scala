@@ -524,9 +524,9 @@ object Similarity {
       .parquet(s"$path/cells/batch=0")
     spark.createDataFrame(centroids).toDF("cell", "c_vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$path/_meta.json",
-      Map("nCells" -> nCells.toString, "kmeansSeed" -> seed.toString,
-        "formatVersion" -> "1"))
+    graft.operators.StoreMaintenance.writeMeta(spark, path,
+      graft.operators.StoreMaintenance.IvfIndex,
+      Map("nCells" -> nCells.toString, "kmeansSeed" -> seed.toString))
     // re-install invalidates stale same-session listings (the
     // writeNearDupStore convention — the append path already refreshes)
     spark.catalog.refreshByPath(path)
@@ -1028,10 +1028,10 @@ object Similarity {
       yield (j, c, cb.centroids(j)(c).toSeq, cb.norm2(j)(c))
     spark.createDataFrame(rows).toDF("j", "c", "centroid", "norm2")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$path/_meta.json",
+    graft.operators.StoreMaintenance.writeMeta(spark, path,
+      graft.operators.StoreMaintenance.PqIndex,
       Map("m" -> cb.m.toString, "k" -> cb.k.toString,
-        "subDim" -> cb.subDim.toString,
-        "formatVersion" -> "1") ++ metaExtra)
+        "subDim" -> cb.subDim.toString) ++ metaExtra)
     // re-install invalidates stale same-session listings (the
     // writeNearDupStore convention)
     spark.catalog.refreshByPath(path)
@@ -1041,7 +1041,8 @@ object Similarity {
     * sidecar (parameters travel WITH the store: a reader guessing m/k
     * would silently mis-decode, the near-dup store's `_meta` lesson). */
   def loadPqCodebooks(spark: SparkSession, path: String): PqCodebooks = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$path/_meta.json")
+    val meta = graft.operators.StoreMaintenance.readMeta(spark, path,
+      graft.operators.StoreMaintenance.PqIndex)
     val m = meta("m").toInt; val k = meta("k").toInt
     val subDim = meta("subDim").toInt
     val rows = spark.read.parquet(s"$path/codebooks")
@@ -1109,6 +1110,9 @@ object Similarity {
                            path: String, batchId: Long,
                            idCol: String, textCol: String,
                            vecCol: String = "embedding"): Unit = {
+    // refuse an index in another layout before any tombstone lands
+    graft.operators.StoreMaintenance.readMeta(oldSnap.sparkSession, path,
+      graft.operators.StoreMaintenance.PqIndex)
     val diff = graft.metrics.ReleaseGate
       .snapshotDiff(oldSnap, newSnap, idCol, textCol)
       .localCheckpoint() // two consumers of one skinny (id, status) frame

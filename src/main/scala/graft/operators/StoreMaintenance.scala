@@ -2,7 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe GENERATION COMPACTION shared by the at-rest stores whose
+/** The at-rest stores' shared machinery: each store's on-disk format
+  * and its one `_meta.json` reader/writer ([[StoreFormat]],
+  * [[readMeta]]), and the guards and fold below.
+  *
+  * Crash-safe GENERATION COMPACTION shared by the at-rest stores whose
   * tables accumulate `batch=<id>` dirs per ingest batch (near-dup
   * shingles/signatures/bandkeys, perceptual bands): fold every
   * committed generation into a single `batch=0` per table, bounding
@@ -32,6 +36,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * loudly on the marker ([[requireNoCrashedCompaction]]) — reading
   * mid-swap could see a half-old/half-new table set. */
 private[graft] object StoreMaintenance {
+
+  /** The one on-disk layout an at-rest store is read in: `installer`
+    * names the op that writes it, `version` the `formatVersion` its
+    * `_meta.json` records. A store in any other layout is refused, and
+    * re-running the installer is the only migration. */
+  final case class StoreFormat(installer: String, version: Int)
+
+  val FpStore = StoreFormat("writeFpStore", 2)
+  val NearDupStore = StoreFormat("writeNearDupStore", 3)
+  val BoilerplateStore = StoreFormat("writeBoilerplateStore", 1)
+  val EvalGramStore = StoreFormat("writeEvalGramStore", 2)
+  val Bm25Index = StoreFormat("writeBm25Index", 2)
+  val BigramLmStore = StoreFormat("writeBigramLmStore", 1)
+  val PqIndex = StoreFormat("installPqIndex", 1)
+  val IvfIndex = StoreFormat("writeIvfIndex", 1)
+  val ImageNearDupStore = StoreFormat("writeImageNearDupStore", 2)
+
+  private def metaPath(dir: String): String = s"$dir/_meta.json"
+
+  /** Write a store's `_meta.json`: `fields` plus the format's version. */
+  def writeMeta(spark: SparkSession, dir: String, format: StoreFormat,
+                fields: Map[String, String]): Unit =
+    graft.sources.Sources.writeJsonSidecarFs(spark, metaPath(dir),
+      fields + ("formatVersion" -> format.version.toString))
+
+  /** A store's `_meta.json`, refused unless it records exactly the
+    * format's version. */
+  def readMeta(spark: SparkSession, dir: String,
+               format: StoreFormat): Map[String, String] = {
+    val meta = graft.sources.Sources.readJsonSidecarFs(spark, metaPath(dir))
+    val found = meta.get("formatVersion")
+    require(found.contains(format.version.toString),
+      s"store at $dir records formatVersion ${found.getOrElse("(none)")}; " +
+        s"this build reads only version ${format.version} — reinstall it " +
+        s"with ${format.installer}")
+    meta
+  }
 
   /** One store table: how to project its fold (include any
     * `repartition` the landed layout needs) and the partition columns

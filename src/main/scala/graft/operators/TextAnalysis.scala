@@ -205,8 +205,8 @@ object TextAnalysis {
     // geometry-only meta, written LAST (a probe that finds it can rely
     // on postings/batch=0 and _stats/batch_0 being in place); the
     // corpus stats live in _stats, never read-modify-written
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json", Map(
-      "formatVersion" -> "2", "buckets" -> buckets.toString))
+    StoreMaintenance.writeMeta(spark, dir, StoreMaintenance.Bm25Index,
+      Map("buckets" -> buckets.toString))
     spark.catalog.refreshByPath(s"$dir/postings")
   }
 
@@ -238,18 +238,8 @@ object TextAnalysis {
                         textCol: String = "text"): Unit = {
     require(batchId > 0, "batchId 0 is the base install")
     val spark = batch.sparkSession
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    // a v1 index keeps nDocs/sumDl inline in _meta.json and
-    // readBm25Stats PREFERS that branch — landing a batch's postings +
-    // _stats entry against it would leave post-append probes scoring
-    // with the batch's df but stale corpus totals (silently wrong,
-    // violating the rebuild-identical contract). Mirror appendToFpStore:
-    // growing a v1 index requires a writeBm25Index rebuild.
-    require(meta.getOrElse("formatVersion", "1") == "2",
-      s"bm25 index at $dir predates per-batch _stats entries " +
-        s"(formatVersion ${meta.getOrElse("formatVersion", "1")}); " +
-        "rebuild with writeBm25Index to grow it")
-    val buckets = meta("buckets").toLong
+    val buckets = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.Bm25Index)("buckets").toLong
     def terms(c: Column) = split(trim(lower(c)), "\\s+")
     val body = batch.select(col(idCol).as("n_id"), terms(col(textCol)).as("_tk"))
     val dl = body.select(col("n_id"), size(col("_tk")).cast("long").as("dl"))
@@ -277,23 +267,17 @@ object TextAnalysis {
       Map("nDocs" -> nDocs.toString, "sumDl" -> sumDl.toString))
 
   /** Corpus totals of a BM25 index: the exact-long sum over the
-    * per-batch `_stats` entries. A v1 store (stats inline in
-    * `_meta.json`, before the per-batch layout) reads from the meta —
-    * read-only legacy support. */
+    * per-batch `_stats` entries. */
   private[operators] def readBm25Stats(spark: org.apache.spark.sql.SparkSession,
                                        dir: String): (Long, Long) = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    if (meta.contains("nDocs")) (meta("nDocs").toLong, meta("sumDl").toLong)
-    else {
-      val d = new org.apache.hadoop.fs.Path(s"$dir/_stats")
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pat = "batch_(\\d+)\\.json".r
-      val entries = fs.listStatus(d).toSeq.map(_.getPath)
-        .filter(p => pat.matches(p.getName))
-        .map(p => graft.sources.Sources.readJsonSidecarFs(spark, p.toString))
-      require(entries.nonEmpty, s"bm25 index at $dir has no _stats entries")
-      (entries.map(_("nDocs").toLong).sum, entries.map(_("sumDl").toLong).sum)
-    }
+    val d = new org.apache.hadoop.fs.Path(s"$dir/_stats")
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pat = "batch_(\\d+)\\.json".r
+    val entries = fs.listStatus(d).toSeq.map(_.getPath)
+      .filter(p => pat.matches(p.getName))
+      .map(p => graft.sources.Sources.readJsonSidecarFs(spark, p.toString))
+    require(entries.nonEmpty, s"bm25 index at $dir has no _stats entries")
+    (entries.map(_("nDocs").toLong).sum, entries.map(_("sumDl").toLong).sum)
   }
 
   /** [[bm25TopK]] served from the at-rest index: same formula, same
@@ -310,8 +294,8 @@ object TextAnalysis {
                         k1: Double = 1.2, b: Double = 0.75,
                         maxDfRatio: Double = 0.5): DataFrame = {
     val spark = queries.sparkSession
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val buckets = meta("buckets").toLong
+    val buckets = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.Bm25Index)("buckets").toLong
     val (nDocs, sumDl) = readBm25Stats(spark, dir)
     // an empty base install (or a corrupt stats entry) must fail loudly
     // here, not surface as NaN/Infinity scores downstream
@@ -1162,11 +1146,10 @@ object TextAnalysis {
       .orderBy(desc("bc"), md5(concat_ws(" ", col("p"), col("c"))).asc)
       .limit(maxBigrams)
       .write.mode("overwrite").parquet(s"$dir/bigrams")
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
+    StoreMaintenance.writeMeta(spark, dir, StoreMaintenance.BigramLmStore,
       Map("denom" -> denom.toString,
         "maxBigrams" -> maxBigrams.toString,
-        "maxVocab" -> maxVocab.toString,
-        "formatVersion" -> "1"))
+        "maxVocab" -> maxVocab.toString))
     // re-install invalidates stale same-session listings (the
     // writeNearDupStore convention)
     spark.catalog.refreshByPath(dir)
@@ -1182,8 +1165,8 @@ object TextAnalysis {
                              idCol: String, textCol: String,
                              lambda: Double = 0.7): DataFrame = {
     val spark = score.sparkSession
-    val denom = graft.sources.Sources
-      .readJsonSidecarFs(spark, s"$dir/_meta.json")("denom").toDouble
+    val denom = StoreMaintenance.readMeta(spark, dir,
+      StoreMaintenance.BigramLmStore)("denom").toDouble
     scoreBatchAgainstLm(score,
       spark.read.parquet(s"$dir/uni"),
       spark.read.parquet(s"$dir/bigrams"),

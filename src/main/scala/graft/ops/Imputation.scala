@@ -48,11 +48,6 @@ object Imputation {
     else df.na.fill(Map(c -> row.getDouble(0)))
   }
 
-  /** Constant fill per column group (silver fill-0 / fill−1 / "MISSING"
-    * blocks). Thin, typed wrapper over na.fill. */
-  def constFill(df: DataFrame, fills: Map[String, Any]): DataFrame =
-    df.na.fill(fills)
-
   /** Mode-impute: fill nulls in each column with its single-pass mode. */
   def modeImpute(df: DataFrame, cols: Seq[String]): DataFrame = {
     val modes = modesOf(df, cols).collect()

@@ -21,10 +21,6 @@ import graft.ops.ColumnOps
   */
 object Gold {
 
-  /** Cast-dictionary schema enforcement (gold_feature_store.py:30–34). */
-  def enforceSchema(df: DataFrame, types: Seq[(String, String)]): DataFrame =
-    df.select(types.map { case (n, t) => col(n).cast(t).as(n) }: _*)
-
   /** gold credit history: months_since_earliest_cr from month-truncated
     * dates (gold_feature_store.py:65–73), numeric-only contract. */
   def creditHistory(silver: DataFrame): DataFrame =

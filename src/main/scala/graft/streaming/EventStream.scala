@@ -293,8 +293,8 @@ object EventStream {
     // never re-read per micro-batch. The WITHIN-batch judgment must use
     // the same parameters as the vs-store one or two docs' dup verdict
     // would depend on whether they arrived in one micro-batch or two.
-    val meta0 = graft.sources.Sources.readJsonSidecarFs(
-      docs.sparkSession, s"$storeDir/_meta.json")
+    val meta0 = graft.operators.StoreMaintenance.readMeta(
+      docs.sparkSession, storeDir, graft.operators.StoreMaintenance.NearDupStore)
     val shingleSize = meta0("shingleSize").toInt
     val numHashes = meta0("numHashes").toInt
     docs.writeStream.outputMode("append").foreachBatch {
@@ -669,8 +669,8 @@ object EventStream {
     // pay a driver read + executor re-broadcast of the filter bytes on
     // every micro-batch for bits that never change
     val spark = docs.sparkSession
-    val n = graft.sources.Sources
-      .readJsonSidecarFs(spark, s"$evalStoreDir/_meta.json")("n").toInt
+    val n = graft.operators.StoreMaintenance.readMeta(spark, evalStoreDir,
+      graft.operators.StoreMaintenance.EvalGramStore)("n").toInt
     val probeBytes =
       graft.operators.Dedup.mergedBloomBytes(spark, evalStoreDir, None)
     docs.writeStream.outputMode("append").foreachBatch {
@@ -720,8 +720,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.operators.TextAnalysis
     val spark = docs.sparkSession
-    val denom = graft.sources.Sources
-      .readJsonSidecarFs(spark, s"$lmStoreDir/_meta.json")("denom").toDouble
+    val denom = graft.operators.StoreMaintenance.readMeta(spark, lmStoreDir,
+      graft.operators.StoreMaintenance.BigramLmStore)("denom").toDouble
     // localCheckpoint, not persist: eager (materialized before the
     // first batch), and the blocks are released by the ContextCleaner
     // once the writer/query is dropped — a persist here had no

@@ -684,26 +684,6 @@ class DedupSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("incrementalNearDupFromStore falls back to signatures on a bands mismatch") {
-    // the pinned-geometry contract: a caller probing with a different
-    // bands knob must NOT mis-collide against the at-rest band keys —
-    // it takes the (store-linear but correct) signature path, and the
-    // exact-Jaccard verify makes both paths agree on this corpus
-    val dir = java.nio.file.Files.createTempDirectory("ndfallback").toString
-    val docs = Tables.documents(spark, sf)
-    val batch = docs.filter($"doc_id" % 5 === 0)
-    val corpus = docs.filter($"doc_id" % 5 =!= 0)
-    Dedup.writeNearDupStore(corpus, "doc_id", "text", dir)
-    val v2 = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text")
-      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val fb = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text",
-        bands = 8)
-      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    assert(v2 == fb && v2.nonEmpty,
-      "pruned and fallback paths must agree on the planted corpus")
-    spark.catalog.clearCache()
-  }
-
   test("softDedupWeights: commonness counts, 1/n weights, every row flows") {
     val docs = Seq(
       (1L, "Hello, World!"), (2L, "hello world"), (3L, "HELLO  world..."),

@@ -694,11 +694,14 @@ class TextAnalysisSpec extends SparkSpec {
     assert(ex.getMessage.contains("writeBm25Index"))
     assert(spark.read.parquet(s"$dir/postings").count() == before,
       "nothing may land on the refused append")
-    // the v1 index still serves probes read-only (legacy support)
+    // the probe refuses the v1 index too: a reinstall is the only
+    // migration
     val q = docs.filter($"doc_id" % 83 === 0 && $"doc_id" < 500)
       .select($"doc_id".as("q_id"), substring($"text", 1, 60).as("q_text"))
-    assert(TextAnalysis.bm25TopKFromIndex(dir, q, 5, maxDfRatio = 1.0)
-      .count() > 0)
+    val probeEx = intercept[IllegalArgumentException] {
+      TextAnalysis.bm25TopKFromIndex(dir, q, 5, maxDfRatio = 1.0)
+    }
+    assert(probeEx.getMessage.contains("writeBm25Index"))
   }
 
   test("bm25 store: df prune live on the store path ≡ live path " +
